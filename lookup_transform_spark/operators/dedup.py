@@ -739,44 +739,6 @@ def ngram_jaccard_pairs(
     )
 
 
-def simhash_signature_text(
-    text_col: str, bits: int = 64
-) -> F.Column:
-    """SimHash over word tokens: bit j of the signature is the sign of
-    Σ_tokens (±1 depending on bit j of xxhash64(token)).
-
-    Expressed as one ``aggregate`` over the token array with an
-    array<int> accumulator — stays in codegen, no UDF.
-    """
-    tokens = F.array_distinct(_tokens(text_col))
-    zero = F.array_repeat(F.lit(0), bits)
-
-    # bit positions must be Python ints (shiftright takes no Column), so
-    # the per-bit structure is unrolled at plan-build time
-    def step(acc, tok):
-        h = F.xxhash64(tok)
-        bit_votes = F.array(
-            *[
-                F.when(F.shiftright(h, j).bitwiseAND(F.lit(1)) == 1, F.lit(1))
-                .otherwise(F.lit(-1))
-                for j in range(bits)
-            ]
-        )
-        return F.zip_with(acc, bit_votes, lambda x, y: x + y)
-
-    counters = F.aggregate(tokens, zero, step)
-    # pack sign bits into a long; 1<<63 is Long.MIN_VALUE, kept exact
-    sig = F.lit(0).cast("long")
-    for j in range(bits):
-        weight = (1 << j) if j < 63 else -(1 << 63)
-        sig = sig.bitwiseOR(
-            F.when(F.element_at(counters, j + 1) >= 0,
-                   F.lit(weight).cast("long"))
-            .otherwise(F.lit(0).cast("long"))
-        )
-    return sig
-
-
 def _md5_token_hash(tok: F.Column) -> F.Column:
     """First 64 bits of md5(token) as a signed long, all JVM-side.
 
@@ -799,8 +761,10 @@ def _md5_token_hash(tok: F.Column) -> F.Column:
 def simhash_signature_text_pandas(
     text_col: str, bits: int = 64, hash_family: str = "xxhash64"
 ) -> F.Column:
-    """Bit-identical to ``simhash_signature_text`` with token hashing
-    JVM-side and the bit-vote accumulation vectorized in numpy.
+    """SimHash over distinct word tokens: bit j of the signature is set
+    when Σ_tokens (±1 by bit j of the token's 64-bit hash) >= 0. Token
+    hashing runs JVM-side; the bit-vote accumulation is vectorized in
+    numpy.
 
     ``hash_family``: ``"xxhash64"`` (default — fastest, engine-native)
     or ``"md5"`` (first 64 md5 bits via ``_md5_token_hash`` — portable

@@ -10,6 +10,7 @@ lookup surface.
 from __future__ import annotations
 
 import os  # noqa: F401
+import re
 
 from pyspark.sql import DataFrame, SparkSession, Window  # noqa: F401
 from pyspark.sql import functions as F  # noqa: F401
@@ -54,6 +55,19 @@ DECONTAM_TRIGRAMS = (
     "row value spark", "group slow spark",
 )
 
+
+def _decontam_pattern(grams) -> str:
+    """RLIKE alternation over ``grams``, pasted into a SQL string literal:
+    a regex metacharacter would change the match, a quote end the literal."""
+    for g in grams:
+        if not re.fullmatch(r"[a-z]+ [a-z]+ [a-z]+", g):
+            raise ValueError(f"blocklist entry {g!r} is not three [a-z] tokens")
+    return "(^| )(" + "|".join(grams) + ")( |$)"
+
+
+_DECONTAM_PAT = _decontam_pattern(DECONTAM_TRIGRAMS)
+
+
 @_q(
     "decontaminate",
     """WITH toks AS (
@@ -90,11 +104,13 @@ def q_decontaminate(spark, sf):
     split, so joining 3 consecutive tokens with ' ' reconstructs the
     raw substring between token boundaries — a blocklisted trigram
     exists IFF the text matches ``(^| )gram( |$)``. Blocklist entries
-    are [a-z ]-only plan literals (no regex metachars). NULL text has
-    no grams → kept, as before (the IS NULL arm)."""
+    are [a-z ]-only plan literals (no regex metachars), checked at
+    import by ``_decontam_pattern``. NULL text has no grams → kept, as
+    before (the IS NULL arm)."""
     docs = _t(spark, sf, "documents")
-    pat = "(^| )(" + "|".join(DECONTAM_TRIGRAMS) + ")( |$)"
-    return docs.filter(f"text IS NULL OR NOT (text RLIKE '{pat}')").select(
+    return docs.filter(
+        f"text IS NULL OR NOT (text RLIKE '{_DECONTAM_PAT}')"
+    ).select(
         "doc_id", "lang", "source", "n_chars"
     )
 

@@ -34,7 +34,8 @@ from lookup_transform_spark.operators.similarity import (
     lsh_bucket_topk,
 )
 from lookup_transform_spark.plans.lookup import LookupSpec
-from lookup_transform_spark.scale_profile import apply_scale_profile
+from lookup_transform_spark.scale_profile import settings_for
+from lookup_transform_spark.session import scoped
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
@@ -93,39 +94,30 @@ def scratch_path(prefix: str, sf: str) -> str:
     return f"{SCRATCH}/{prefix}_{_vtag(sf)}"
 
 
+_NANOS = {"spark.sql.legacy.parquet.nanosAsLong": "true"}
+
+
 def _q(name: str, oracle: str | None = None):
     def deco(fn):
         import functools
 
         @functools.wraps(fn)
         def wrapped(spark, sf_dir):
-            # size-gated conf profile (scale_profile.py): sub-64MB
-            # inputs run the measured small-input regime (AQE off,
-            # 8 shuffle partitions), at-scale dirs keep AQE + the
-            # CPU-matched shuffle width. Applied at the registry
-            # boundary so EVERY harness (driver correctness, bench,
-            # parity, probes) measures the same regime.
-            apply_scale_profile(spark, sf_dir)
-            return fn(spark, sf_dir)
+            # size-gated regime (scale_profile.py), scoped at the
+            # registry boundary so EVERY harness (driver correctness,
+            # bench, parity, probes) measures the same regime on a
+            # child session and none sees its own session changed.
+            # nanosAsLong: the events fixture is ns-precision parquet.
+            return fn(scoped(spark, settings_for(sf_dir) | _NANOS), sf_dir)
 
         QUERIES[name] = wrapped
         if oracle is not None:
             ORACLES[name] = oracle
         # return the UNWRAPPED fn: registry-internal composition (one
-        # query building on another's helper) shouldn't re-run the
-        # profile gate per layer
+        # query building on another's helper) stays on the session it
+        # was given
         return fn
     return deco
-
-
-# (applicationId, stats-db-or-None, sf_dir, table) -> DataFrame.
-# A DataFrame is an immutable logical plan; re-creating it per query
-# re-reads the parquet footer for schema inference (~70 ms measured,
-# FLOOR_PROFILE.json schema_read_sec) — pure plan-build waste that the
-# bench pays on every one of ~160 queries × 5 repeats. Fixture dirs
-# never mutate mid-process, and the app-id key drops entries with the
-# session that owned them.
-_TABLE_CACHE: dict[tuple[str, str | None, str, str], DataFrame] = {}
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -137,15 +129,22 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     on plain parquet reads."""
     from lookup_transform_spark import stats
 
+    # (stats-db-or-None, sf_dir, table) -> DataFrame, per session: a
+    # frame plans under its own session's confs. Re-creating a frame
+    # per query re-reads the parquet footer for schema inference
+    # (~70 ms, FLOOR_PROFILE.json schema_read_sec) — plan-build waste
+    # on every one of ~160 queries × 5 bench repeats; fixture dirs
+    # never mutate mid-process.
+    cache = spark.__dict__.setdefault("_lt_tables", {})
     db = stats.stats_db_for(spark, sf_dir)
-    key = (spark.sparkContext.applicationId, db, os.path.abspath(sf_dir), name)
-    df = _TABLE_CACHE.get(key)
+    key = (db, os.path.abspath(sf_dir), name)
+    df = cache.get(key)
     if df is None:
         if db is not None and name in stats.STATS_TABLES:
             df = spark.table(f"{db}.{name}")
         else:
             df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        _TABLE_CACHE[key] = df
+        cache[key] = df
     return df
 
 
@@ -154,14 +153,13 @@ def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
     precision/encoding the generated parquet uses:
 
     - ns-precision parquet (Spark 4 refuses it by default) → read nanos
-      as long, truncate to µs — the same truncation DuckDB's epoch_us()
-      applies in the oracles;
+      as long (``_q`` scopes nanosAsLong), truncate to µs — the same
+      truncation DuckDB's epoch_us() applies in the oracles;
     - µs timestamp without timezone → TIMESTAMP_NTZ on read; cast to
       TIMESTAMP (session tz is pinned UTC, so the cast is
       epoch-preserving and ``unix_micros`` applies)."""
     from lookup_transform_spark.sources.readers import normalize_events_ts
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     return normalize_events_ts(_t(spark, sf_dir, "events"))
 
 

@@ -12,25 +12,25 @@ settings would be wrong — AQE's coalescing/skew-splitting and a
 CPU-matched partition count are the scale story (ULTRASCALE.json shows
 AQE skew-join engaging at 512×).
 
-So the knob is gated on INPUT SIZE, the same way a warehouse picks a
+So the regime is gated on INPUT SIZE, the same way a warehouse picks a
 plan regime from table statistics, not on "bench mode": callers (the
 registry's query wrapper) pass the fixture dir; below
 ``SMALL_INPUT_MAX_BYTES`` (default 64 MB — sf0.1 is 17 MB, the 32×
 derived fixture is 486 MB, so the gate cleanly separates correctness/
-bench scale from every scaling probe) the session gets the small-input
-profile, above it the standard one. On a real cluster no input ever
-sits under the gate and this module is a no-op.
+bench scale from every scaling probe) a query gets the small-input
+settings, above it the standard ones. On a real cluster no input ever
+sits under the gate and the full settings are the session defaults.
 
-Runtime-settable confs only (``spark.conf.set``), so the profile works
-on ANY session — including the driver's plain correctness session —
-and flips back when the same session later touches an at-scale dir.
-
-``SPARK_GRAFT_SCALE_PROFILE=0`` disables the gate entirely (A/B runs).
+This module only decides (``settings_for``); the registry builds each
+query on ``session.scoped(spark, settings)``, a child session, so the
+caller's session — the driver's plain one included — never changes.
 """
 
 from __future__ import annotations
 
 import os
+
+from lookup_transform_spark.session import full_width
 
 SMALL_INPUT_MAX_BYTES = int(
     os.environ.get("SPARK_GRAFT_SMALL_INPUT_MAX_BYTES", str(64 << 20))
@@ -40,11 +40,6 @@ SMALL_INPUT_MAX_BYTES = int(
 # (the registry's staleness gates handle the regenerated-fixture case by
 # mtime, which doesn't change a dir's size class) — cache the walk
 _dir_bytes: dict[str, int] = {}
-
-# applicationId -> profile name last applied, so the per-query fast path
-# is two dict lookups; keyed by app id (not session object) so a
-# stopped-and-recreated session re-applies
-_applied: dict[str, str] = {}
 
 
 def fixture_bytes(sf_dir: str) -> int:
@@ -69,25 +64,19 @@ def profile_for(sf_dir: str) -> str:
     )
 
 
-def apply_scale_profile(spark, sf_dir: str) -> str:
-    """Apply the size-matched conf profile to ``spark`` for queries over
-    ``sf_dir``; returns the profile name. Idempotent and cheap when the
-    session is already on the right profile."""
-    if os.environ.get("SPARK_GRAFT_SCALE_PROFILE", "1") == "0":
-        return "disabled"
-    prof = profile_for(sf_dir)
-    app = spark.sparkContext.applicationId
-    if _applied.get(app) == prof:
-        return prof
-    if prof == "small":
+_SHUFFLE = "spark.sql.shuffle.partitions"
+_AQE = "spark.sql.adaptive.enabled"
+
+
+def full_settings() -> dict[str, str]:
+    """The at-scale regime: AQE on, the CPU-matched shuffle width."""
+    return {_SHUFFLE: full_width(), _AQE: "true"}
+
+
+def settings_for(sf_dir: str) -> dict[str, str]:
+    """The size-matched session settings for queries over ``sf_dir``."""
+    if profile_for(sf_dir) == "small":
         # the measured floor winner: one wave of 8 shuffle tasks, no
         # adaptive re-planning stage boundaries
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-    else:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-        shuffle = os.environ.get("SPARK_GRAFT_SHUFFLE", cpus)
-        spark.conf.set("spark.sql.shuffle.partitions", str(shuffle))
-        spark.conf.set("spark.sql.adaptive.enabled", "true")
-    _applied[app] = prof
-    return prof
+        return {_SHUFFLE: "8", _AQE: "false"}
+    return full_settings()

@@ -1,4 +1,5 @@
-"""SparkSession factory tuned for the test/bench environment.
+"""SparkSession factory tuned for the test/bench environment, and
+``scoped``, the one way query code sets session confs.
 
 Local mode is a single JVM; ``SPARK_GRAFT_CPUS`` controls thread count
 (default 32 to match the driver's box). On a real cluster the same
@@ -10,8 +11,9 @@ scale story for every operator here.
 from __future__ import annotations
 
 import os
+import threading
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(
@@ -49,7 +51,7 @@ def get_spark(
             (pp + os.pathsep if pp else "") + repo
         )
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    shuffle = shuffle_partitions or int(os.environ.get("SPARK_GRAFT_SHUFFLE", cpus))
+    shuffle = shuffle_partitions or int(full_width())
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -97,13 +99,62 @@ def get_spark(
     return spark
 
 
-def load_tables(spark: SparkSession, sf_dir: str, *names: str):
-    """Read testdata parquet tables; returns a dict name → DataFrame.
-    Defaults to the canonical fixture set (``parity.TABLES``) — one
-    shared constant, so the Spark loader and the DuckDB view
-    registration can't drift apart."""
-    if not names:
-        from lookup_transform_spark.parity import TABLES
+def full_width() -> str:
+    """The at-scale shuffle width: ``SPARK_GRAFT_SHUFFLE``, else one
+    partition per core (``SPARK_GRAFT_CPUS``)."""
+    return os.environ.get(
+        "SPARK_GRAFT_SHUFFLE", os.environ.get("SPARK_GRAFT_CPUS", "32")
+    )
 
-        names = tuple(TABLES)
-    return {n: spark.read.parquet(f"{sf_dir}/{n}.parquet") for n in names}
+
+_SCOPED_LOCK = threading.Lock()
+
+
+def scoped(spark: SparkSession, settings: dict[str, str]) -> SparkSession:
+    """A cached child of ``spark`` with ``settings`` applied — the ONLY
+    place query code sets session confs; ``spark`` itself never changes.
+
+    The child is the JVM ``cloneSession()``: it inherits the parent's
+    confs, temp views and UDFs as of clone time, and its confs never
+    reach the parent. Later parent settings never reach it either, so
+    the cache key includes the parent's conf fingerprint. Caching also
+    bounds the listener-bus entries that every session's stream manager
+    (each child's is created here) leaves on the SparkContext for good.
+    The child shares the parent's stats registry and mirrors its
+    streaming listeners, re-synced per call: a listener on the parent
+    otherwise never sees a child's streams."""
+    from lookup_transform_spark import stats
+
+    jparent = spark._jsparkSession
+    key = (jparent.conf().getAll().hashCode(), tuple(sorted(settings.items())))
+    # two threads scoping at once must neither clone twice nor add a
+    # listener twice (each copy would see every event)
+    with _SCOPED_LOCK:
+        children = spark.__dict__.setdefault("_lt_children", {})
+        child = children.get(key)
+        if child is None:
+            child = type(spark)(spark.sparkContext, jparent.cloneSession())
+            for k, v in settings.items():
+                child.conf.set(k, v)
+            child._lt_stats_registered = stats._registry(spark)
+            children[key] = child
+        want = list(jparent.streams().listListeners())
+        mgr = child._jsparkSession.streams()
+        have = list(mgr.listListeners())
+        if len(want) != len(have) or not all(
+            a.equals(b) for a, b in zip(want, have)
+        ):
+            for listener in have:
+                mgr.removeListener(listener)
+            for listener in want:
+                mgr.addListener(listener)
+    return child
+
+
+def rebind(df: DataFrame, spark: SparkSession) -> DataFrame:
+    """``df``'s logical plan as a frame of ``spark``: a frame plans and
+    runs under the confs of its session (a join, under its left side's)."""
+    jdf = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+        spark._jsparkSession, df._jdf.logicalPlan()
+    )
+    return type(df)(jdf, spark)

@@ -38,6 +38,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from lookup_transform_spark.operators.text import content_fingerprint
+from lookup_transform_spark.scale_profile import full_settings
+from lookup_transform_spark.session import scoped
 
 #: Strict name patterns (ADVICE r7): a stray entry like ``batch_tmp``
 #: must not crash the listing, and ``batch_00001_old`` must not
@@ -690,34 +692,22 @@ def stream_ingest_neardedup(
     # The per-batch LSH probe is a chain of joins against the standing
     # bucketed tables whose best physical strategy shifts as the index
     # grows — exactly what AQE's runtime re-planning is for. The
-    # small-input session profile (scale_profile.py) turns AQE off for
-    # sub-64MB fixtures, which is right for one-shot scheduling-bound
-    # queries but measured 28 → 53 s on THIS loop (r11 A/B: every
-    # probe join ran as an unconverted sort-merge join per trigger).
-    # Scope the full adaptive regime to the stream and restore after.
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        os.environ.get(
-            "SPARK_GRAFT_SHUFFLE", os.environ.get("SPARK_GRAFT_CPUS", "32")
-        ),
+    # small-input regime (scale_profile.py) turns AQE off for sub-64MB
+    # fixtures, which is right for one-shot scheduling-bound queries
+    # but measured 28 → 53 s on THIS loop (r11 A/B: every probe join
+    # ran as an unconverted sort-merge join per trigger). The stream
+    # runs on a child session in the full adaptive regime.
+    q = (
+        scoped(spark, full_settings())
+        .readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(os.path.join(stage, "batch_*"))
+        .writeStream.foreachBatch(handle_batch)
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
     )
-    try:
-        q = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(os.path.join(stage, "batch_*"))
-            .writeStream.foreachBatch(handle_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
+    q.awaitTermination()
     out = _read_batches(spark, corpus)
     assert out is not None, "ingest produced no committed batches"
     return out

@@ -15,18 +15,19 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 
 from lookup_transform_spark.plans.lookup import LookupSpec
+from lookup_transform_spark.session import rebind, scoped
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream over the events fixture (ns parquet → µs ts,
-    same normalization as registry._events). The file source requires a
-    directory, so the single fixture file is staged via symlink."""
+    same normalization and nanosAsLong session as registry._events). The
+    file source requires a directory, so the single fixture file is
+    staged via symlink."""
     import hashlib
     import os
 
     from lookup_transform_spark.sources.readers import normalize_events_ts
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     batch = spark.read.parquet(f"{sf_dir}/events.parquet")
 
     repo = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -68,7 +69,7 @@ def run_to_memory(
     df: DataFrame,
     name: str | None = None,
     output_mode: str = "append",
-    state_partitions: int | None = 8,
+    state_partitions: int = 8,
 ) -> DataFrame:
     """Execute a streaming plan to completion (availableNow trigger) into
     a memory sink; returns the result as a batch DataFrame. This is how
@@ -81,32 +82,20 @@ def run_to_memory(
     stateful streaming query is FIXED at its first run by the
     checkpoint, so this is a per-query deployment decision, not a
     session conf — size it to expected state volume, not batch width.
-    Pass ``None`` to inherit the session default.
-
-    CAVEAT: shuffle-partitions is session-scoped conf, and micro-batch
-    planning happens throughout the drain, so the override is live for
-    the whole ``start()``→``awaitTermination()`` window — a batch query
-    planned CONCURRENTLY on another thread of the same session compiles
-    with the override, and two overlapping run_to_memory calls race the
-    save/restore. Single-threaded drains (the harness shape) are safe;
-    concurrent use should pass ``None`` and size the session conf.
+    The stream runs on a child session with that width
+    (``session.scoped``), so ``df``'s own session is never changed.
     """
     spark = df.sparkSession
-    conf_key = "spark.sql.shuffle.partitions"
+    run = scoped(spark, {"spark.sql.shuffle.partitions": str(state_partitions)})
     table = name or f"mem_{uuid.uuid4().hex[:8]}"
-    prev = spark.conf.get(conf_key)
-    if state_partitions is not None:
-        spark.conf.set(conf_key, str(state_partitions))
-    try:
-        q = (
-            df.writeStream.format("memory")
-            .queryName(table)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        if state_partitions is not None:
-            spark.conf.set(conf_key, prev)
-    return spark.table(table)
+    q = (
+        rebind(df, run).writeStream.format("memory")
+        .queryName(table)
+        .outputMode(output_mode)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    # the memory sink's view lives in the session that ran the stream;
+    # the rows are handed back bound to the caller's
+    return rebind(run.table(table), spark)

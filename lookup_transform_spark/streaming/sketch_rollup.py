@@ -50,6 +50,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from lookup_transform_spark.session import scoped
 from lookup_transform_spark.streaming.ingest import (
     _read_batches,
     _reset_if_fixture_newer,
@@ -141,23 +142,19 @@ def _maintain_sketch_state(
         # the per-trigger leaf jobs shuffle O(groups × buckets) rows —
         # shuffle width above 1 is pure task-scheduling overhead at any
         # micro-batch size (state writes are coalesce(1) single-file
-        # regardless). Scoped to the loop and restored: foreachBatch
-        # runs on the session whose conf outlives the stream.
-        prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "1")
-        try:
-            q = (
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(os.path.join(stage, "batch_*"))
-                .writeStream.foreachBatch(handle_batch)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
+        # regardless). The stream runs on a child session with that
+        # width; the caller's keeps its own.
+        q = (
+            scoped(spark, {"spark.sql.shuffle.partitions": "1"})
+            .readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(os.path.join(stage, "batch_*"))
+            .writeStream.foreachBatch(handle_batch)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
         tmp = marker + ".tmp"
         with open(tmp, "w") as fh:
             json.dump(spec, fh)

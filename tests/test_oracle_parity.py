@@ -26,7 +26,10 @@ def duck():
 
 @pytest.mark.parametrize("name", sorted(registry.ORACLES))
 def test_query_matches_oracle(spark, duck, name):
+    before = spark.conf.getAll
     sdf = registry.QUERIES[name](spark, SF_DIR)
+    # building a query never changes the caller's session
+    assert spark.conf.getAll == before
     spark_rows = [tuple(r) for r in sdf.collect()]
     spark_cols = sdf.columns
 
@@ -53,6 +56,8 @@ def test_query_matches_oracle(spark, duck, name):
 
 @pytest.mark.parametrize("name", sorted(set(registry.QUERIES) - set(registry.ORACLES)))
 def test_rows_only_queries_run(spark, name):
+    before = spark.conf.getAll
     df = registry.QUERIES[name](spark, SF_DIR)
+    assert spark.conf.getAll == before
     assert df.count() >= 0
     assert len(df.schema.fields) > 0

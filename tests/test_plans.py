@@ -10,6 +10,8 @@ from __future__ import annotations
 import io
 from contextlib import redirect_stdout
 
+import pytest
+
 from lookup_transform_spark import registry
 
 SF = "/root/testdata/sf0.01"
@@ -302,16 +304,29 @@ def test_zorder_write_files_have_disjoint_z_ranges(spark, tmp_path):
 
 
 def test_decontaminate_never_shuffles_corpus(spark):
-    # r11: the blocklist is a plan literal inside a short-circuiting
-    # exists() — the whole query is one scan + filter projection: no
-    # joins, no explode, and ZERO exchanges (the r7-r10 explode +
-    # broadcast-semi + distinct + broadcast-anti form paid one hash
-    # exchange and a second corpus scan)
+    # r11: the blocklist is a plan literal inside one boundary-guarded
+    # RLIKE over the raw text — the whole query is one scan + filter
+    # projection: no joins, no explode, and ZERO exchanges (the r7-r10
+    # explode + broadcast-semi + distinct + broadcast-anti form paid one
+    # hash exchange and a second corpus scan)
     df = registry.QUERIES["decontaminate"](spark, SF)
     plan = explain_str(df, "simple")
     assert "Join" not in plan
     assert "Generate" not in plan  # no explode
     assert "Exchange" not in plan
+
+
+@pytest.mark.parametrize(
+    "entry", ["big order.* scan", "big order scan|x", "it's a trap", "big  order scan"]
+)
+def test_decontaminate_blocklist_rejects_unsafe_entries(entry):
+    # entries are pasted into a regex inside a SQL string literal: a
+    # metacharacter would change the match, a quote would end the literal
+    from lookup_transform_spark.queries.q_corpus import _decontam_pattern
+
+    assert _decontam_pattern(["big order scan"]) == "(^| )(big order scan)( |$)"
+    with pytest.raises(ValueError, match="three"):
+        _decontam_pattern(["big order scan", entry])
 
 
 def test_dedup_repartition_gated_on_input_width(spark):
